@@ -315,6 +315,7 @@ def test_ngram_jaccard_carries_sizes_through_index(spark, sf001_dir):
     plan = _plan(spark, sf001_dir, "ngram_jaccard_dups")
     assert "InMemoryRelation" not in plan
     assert "Join" not in plan  # jaccard computed off the count agg alone
-    for line in plan.splitlines():
-        if "Filter" in line and "Scan" not in line:
-            assert "regexp_replace" not in line, line[:160]
+    filters = [ln for ln in plan.splitlines() if "Filter" in ln and "Scan" not in ln]
+    assert filters, "no Filter node outside a Scan: the plan format drifted"
+    for line in filters:
+        assert "regexp_replace" not in line, line[:160]

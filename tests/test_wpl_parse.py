@@ -14,7 +14,14 @@ from wp_motor_spark.wpl import MultiParser, compile_rule, parse_wpl
 
 REF = "/root/reference"
 
-NGINX_WPL = open(f"{REF}/tests/instance/wpl/example/simple/parse.wpl").read()
+
+def nginx_wpl() -> str:
+    """The reference's nginx rule, read at test time so this module
+    collects without the reference tree."""
+    with open(f"{REF}/tests/instance/wpl/example/simple/parse.wpl") as fh:
+        return fh.read()
+
+
 NGINX_LINE = (
     '192.168.1.2 - - [06/Aug/2019:12:12:19 +0800] "GET /nginx-logo.png HTTP/1.1" '
     '200 368 "http://119.122.1.4/" "Mozilla/5.0 (Macintosh)" "-"'
@@ -22,7 +29,7 @@ NGINX_LINE = (
 
 
 def test_parse_wpl_ast():
-    rules = parse_wpl(NGINX_WPL)
+    rules = parse_wpl(nginx_wpl())
     assert len(rules) == 1
     r = rules[0]
     assert r.key == "/example/simple/nginx"
@@ -33,7 +40,7 @@ def test_parse_wpl_ast():
 
 
 def test_nginx_golden(spark):
-    cr = compile_rule(parse_wpl(NGINX_WPL)[0])
+    cr = compile_rule(parse_wpl(nginx_wpl())[0])
     df = spark.createDataFrame([(NGINX_LINE,)], ["value"])
     row = cr.extract(df).collect()[0]
     assert row["sip"] == "192.168.1.2"
@@ -50,14 +57,14 @@ def test_nginx_golden(spark):
 
 
 def test_nginx_sample_dat(spark):
-    cr = compile_rule(parse_wpl(NGINX_WPL)[0])
+    cr = compile_rule(parse_wpl(nginx_wpl())[0])
     df = spark.read.text(f"{REF}/tests/sample/nginx/sample.dat")
     out = cr.extract(df)
     assert out.where(F.col("_disposition") == "success").count() == df.count()
 
 
 def test_miss_and_residue(spark):
-    cr = compile_rule(parse_wpl(NGINX_WPL)[0])
+    cr = compile_rule(parse_wpl(nginx_wpl())[0])
     ok = NGINX_LINE
     partial = NGINX_LINE + " tail"  # short tail (<20%) -> partial
     garbage = "not an access log line at all ..................."
@@ -446,11 +453,11 @@ def test_http_request_method_validation(spark):
     assert got["GET  /hello.png  HTTP/1.1 200"][1]["uri"] == "/hello.png"
 
 
-def test_adaptive_reorder_and_short_circuit(spark):
+def test_adaptive_reorder(spark):
     """parser.rs:119-134 `optimized()`: rules resort by sampled hit count
     (desc, ties by declared index); with disjoint rules the labeled output
-    is identical in all four mode/order combinations, and the hot rule
-    moves to the front of the compiled cascade."""
+    is identical in both orders, and the hot rule moves to the front of
+    the compiled cascade."""
     wpl = (
         "rule cold { (symbol(#),digit:n) }\n"
         "rule hot { (ip:src,digit:port) }\n"
@@ -469,16 +476,14 @@ def test_adaptive_reorder_and_short_circuit(spark):
     tied = mp.optimized(counts={"hot": 5, "cold": 5})
     assert [cr.key for cr in tied.rules] == ["cold", "hot"]
 
-    def snap(parser, **kw):
+    def snap(parser):
         return sorted(
             (r["value"], r["_rule"], r["_disposition"], r["_residue"])
-            for r in parser.label(df, **kw).collect()
+            for r in parser.label(df).collect()
         )
 
     base = snap(mp)
-    assert snap(mp, short_circuit=True) == base
     assert snap(opt) == base
-    assert snap(opt, short_circuit=True) == base
     # hit rows labeled with the right rule either way
     assert sum(1 for _, rule, _, _ in base if rule == "hot") == 90
 

@@ -14,7 +14,9 @@ Infra side-channels (tests/instance/topology/sinks/infra.d/): miss
 (WPL-unmatched), residue (partial tails), error (empty OML output),
 default (no OML model matched). Everything is map-only + broadcast joins:
 at 100TB each branch is an independent column-pruned scan of the same
-source, and multi-sink fanout reuses one parsed DataFrame (persist()).
+source. Multi-sink fanout shares one logical plan but nothing is
+materialized at the fork: every sink write (and its line count) re-runs the
+parse over the source.
 
 Batch and streaming share the plan: `run_stream` wraps the same batch
 assembly in foreachBatch (the reference's daemon mode).
@@ -74,9 +76,6 @@ class PipelineResult:
 
     branches: dict[str, DataFrame] = field(default_factory=dict)
     sink_lines: dict[str, DataFrame] = field(default_factory=dict)
-
-    def counts(self) -> dict[str, int]:
-        return {k: v.count() for k, v in self.sink_lines.items()}
 
 
 class Pipeline:
@@ -151,15 +150,11 @@ class Pipeline:
             for k, v in self.tags.items():
                 if k not in ok.columns:
                     ok = ok.withColumn(k, F.lit(v))
-            # mechanism metadata (09-metadata.md): wp_event_id per record,
-            # wp_src_key from the source identifier, wp_src_ip passthrough
-            # (net sources attach it; file sources have no upstream peer).
-            # Declared only-if-absent; unused ones die in column pruning.
-            if "wp_event_id" not in ok.columns:  # belt-and-braces: set at ingest
-                ok = ok.withColumn(
-                    "wp_event_id",
-                    _event_uuid(col if col in ok.columns else None, self.src_key),
-                )
+            # mechanism metadata (09-metadata.md; wp_event_id was set at
+            # ingest above): wp_src_key from the source identifier,
+            # wp_src_ip passthrough (net sources attach it; file sources
+            # have no upstream peer). Declared only-if-absent; unused ones
+            # die in column pruning.
             if "wp_src_key" not in ok.columns:
                 ok = ok.withColumn(
                     "wp_src_key",

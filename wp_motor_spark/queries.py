@@ -17,13 +17,16 @@ from __future__ import annotations
 import os
 from collections.abc import Callable
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from wp_motor_spark.conditions import compile_condition
 from wp_motor_spark.knowdb import KnowDB
 from wp_motor_spark.operators import dedup, similarity, text
 from wp_motor_spark.operators.stats import windowed_counts
+# release_persists is re-exported for the suite harnesses (bench.py,
+# tools/oracle_check.py, perfbench)
+from wp_motor_spark.session import release_persists  # noqa: F401
+from wp_motor_spark.session import track_persist as _track_persist
 from wp_motor_spark.wpl import compile_rule, parse_wpl
 
 
@@ -39,46 +42,6 @@ def _t(
     from wp_motor_spark.sources.tables import load_table
 
     return load_table(spark, sf_dir, name, spread=spread)
-
-
-#: persisted intermediates registered by query builders so a suite harness
-#: (bench.py, tools/oracle_check.py) can release them after each query's
-#: result materializes — a 200-query session would otherwise accumulate
-#: InMemoryRelations until eviction pressure.
-_PERSISTED: list[DataFrame] = []
-
-
-def _track_persist(df: DataFrame, level=StorageLevel.MEMORY_AND_DISK) -> DataFrame:
-    out = df.persist(level)
-    _PERSISTED.append(out)
-    return out
-
-
-def release_persists() -> int:
-    """Unpersist every intermediate registered via _track_persist — both
-    this module's registry and the operator-module one (operators/dedup:
-    the shingle/fingerprint/pair-pipeline persists; r17 — previously
-    untracked, so a later query with a CacheManager-identical plan replayed
-    the first query's cache instead of computing).
-
-    Call after the consuming action (collect/write) — unpersisting before
-    materialization would just force recomputation. Returns the number of
-    handles released."""
-    n = 0
-    while _PERSISTED:
-        try:
-            _PERSISTED.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    dp = dedup._PERSISTED
-    while dp:
-        try:
-            dp.pop().unpersist()
-            n += 1
-        except Exception:
-            pass
-    return n
 
 
 def _global_rank(df: DataFrame, order_cols: list, rank_col: str = "rank") -> DataFrame:

@@ -43,15 +43,12 @@ _NANO_TS_COLUMNS = {"ts"}
 #: scan yields fewer partitions than half the executor parallelism AND the
 #: file is big enough to matter (>= 256 KiB). At 100 TB the scan produces
 #: thousands of splits, the condition is false, and the plan is untouched.
-_SPREAD_MIN_BYTES = int(os.environ.get("WP_SPREAD_MIN_BYTES", str(256 * 1024)))
-_SPREAD_ENABLED = os.environ.get("WP_SPREAD_SMALL_SCANS", "1") != "0"
+_SPREAD_MIN_BYTES = 256 * 1024
 
 
 def _spread_small_scan(
     spark: SparkSession, df: DataFrame, path: str
 ) -> DataFrame:
-    if not _SPREAD_ENABLED:
-        return df
     try:
         nbytes = os.path.getsize(path)
     except OSError:

@@ -37,17 +37,23 @@ PAIR_DELIM = "\x02"
 def _no_pushdown(c: Column) -> Column:
     """Value-identity wrapper that Catalyst treats as nondeterministic:
     ``shuffle`` of a 1-element array always yields that element, but its
-    nondeterministic flag stops PushPredicateThroughNonJoin from
-    substituting the wrapped expression into filters below the projection
-    (the optimization guide's §4.4 duplicated-evaluation pathology, JVM
-    expression edition). Without it, a ``_disposition == 'success'``
-    filter above ``extract()`` is rewritten in terms of the tokenizing
-    regex and pushed to the parquet scan stage — re-running the full
-    parse 3-4x per row in whatever (possibly single-partition) layout the
-    scan has, while the materialized ``__parts`` projection runs it once
-    post-spread. Measured on wpl_parse_clf at sf0.1: the pushed copy was
-    the whole remaining single-threaded stage after the spread-scan
-    change."""
+    nondeterministic flag stops InferFiltersFromGenerate and
+    PushPredicateThroughNonJoin from substituting the wrapped expression
+    into filters below the projection (the optimization guide's §4.4
+    duplicated-evaluation pathology, JVM expression edition). Measured
+    reasons, both at sf0.1:
+
+    - WPL: without it, a ``_disposition == 'success'`` filter above
+      ``extract()`` is rewritten in terms of the tokenizing regex and
+      pushed to the parquet scan stage, re-running the full parse 3-4x per
+      row in whatever (possibly single-partition) layout the scan has,
+      while the materialized ``__parts`` projection runs it once
+      post-spread. On wpl_parse_clf the pushed copy was the whole
+      remaining single-threaded stage after the spread-scan change.
+    - dedup: a filter on the shingle-hash column re-ran the whole shingle
+      tokenizer per row in the pre-spread single-partition scan layout
+      (4x on ngram_jaccard_dups).
+    """
     return F.shuffle(F.array(c)).getItem(0)
 
 # Residue acceptance threshold: unparsed tail <= 20% of line is "partial"
@@ -1435,7 +1441,7 @@ class CompiledRule:
         row, then a literal split. A memchr-style separator-scan plan (the
         reference's approach) was built and measured at ~10% SLOWER once
         its semantics-preserving validity checks are included — see
-        tools/fastpath_experiment.py and PROFILE.md §3."""
+        PROFILE.md §3."""
         repl = DELIM.join(f"${i}" for i in range(1, self.n_groups + 1))
         pre = apply_preprocs(value, self.rule.preprocs)
         return F.split(F.regexp_replace(pre, self.pattern, repl), DELIM, -1)
@@ -1853,28 +1859,12 @@ class MultiParser:
     regex is MATERIALIZED once per row as a ``__parts_i`` column before the
     first-match CASE chains run: codegen subexpression elimination does NOT
     dedupe an expression repeated across the three when-chains (measured
-    4.7x slower for a 3-rule cascade when parts is inlined — every chain
-    re-ran every rule's regex). The trade-off vs the reference's
-    short-circuiting scanner: all R regexes run for every row, but each
-    exactly once — predictable R evals beats the chains' up-to-3R, and
-    anchored patterns fail fast on non-matching rows.
-
-    Adaptive rule reordering (parser.rs:119-134) is available as a
-    plan-time step: ``optimized()`` resorts rules by sampled hit count
-    (desc, ties by declared index — the reference's exact sort) and
-    returns a new parser. MEASURED (3-rule cascade, 90% hot rule, 2M
-    rows, best-of-3): materialized mode 0.9s regardless of order;
-    ``short_circuit=True`` 3.3s declared-order / 2.8s hot-first. So
-    reordering recovers ~16% inside the short-circuit plan but that
-    plan loses ~3x to materialization — the matched rule's regex
-    re-derives per struct-field reference inside its CASE branch,
-    while anchored non-matching regexes already fail fast. The
-    reference's win targets a scanning interpreter where skipping a
-    rule skips real work; under codegen the predictable R-evals plan
-    is the fast one. Default therefore stays materialized
-    declared-order; ``optimized()`` still matters semantically (it
-    changes first-match winners for overlapping rules exactly as the
-    reference's resort does).
+    4.7x slower for a 3-rule cascade when parts is inlined). All R regexes
+    run for every row, each exactly once; anchored patterns fail fast on
+    non-matching rows. A short-circuiting single CASE chain (the
+    reference's scanner shape) measured ~3x slower on a 3-rule/90%-hot
+    cascade, because the matched rule's regex re-derives per struct-field
+    reference inside its branch.
     """
 
     def __init__(self, rules: list[CompiledRule | WplRule] | str):
@@ -1901,15 +1891,10 @@ class MultiParser:
         """parser.rs:119-134: sort rules by hit count desc, ties by
         declared index. Returns a NEW MultiParser; the original order is
         untouched (the reference resorts in place every N events — here
-        re-planning per batch gives the same window semantics). Order
-        only changes plan cost under ``label(short_circuit=True)`` —
-        and that mode measured slower than the default (see class
-        docstring), so this is primarily a semantics-parity API.
-
-        NOTE on semantics: like the reference, reordering changes
-        first-match winners when two rules both match a row. Safe (and
-        output-identical) when rule match sets are disjoint, which is the
-        operating assumption the reference makes too.
+        re-planning per batch gives the same window semantics). Under the
+        materialized ``label`` plan every rule's regex runs anyway, so the
+        order changes no cost; it changes first-match winners when two
+        rules both match a row, exactly as the reference's resort does.
         """
         if counts is None:
             if df is None:
@@ -1923,53 +1908,7 @@ class MultiParser:
         mp.rules = [self.rules[i] for i in order]
         return mp
 
-    def _label_short_circuit(self, df: DataFrame, col: str) -> DataFrame:
-        """Single CASE chain producing struct(_rule,_disposition,_residue).
-
-        Each rule's regex is inlined in its own condition, so codegen
-        evaluates rules in order and stops at the first hit — the matched
-        rule's branch re-derives parts for the struct value (a bounded
-        constant re-evaluation for ONE rule), while every rule after the
-        hit costs nothing. The struct column is referenced 3x in the
-        outer projection, which blocks CollapseProject from inlining it
-        3x (non-cheap expr used more than once), so the chain runs once
-        per row. MEASURED SLOWER than the materialized default (~3x on
-        a 3-rule/90%-hot cascade): the per-branch parts re-derivation
-        outweighs the skipped rules. Kept as the mode where optimized()
-        ordering is observable, not as a fast path.
-        """
-        value = F.col(col)
-        chain: Column | None = None
-        for cr in self.rules:
-            parts = cr.parts_col(value)
-            disp = cr.disposition_col(value, parts)
-            hit = disp.isin("success", "partial")
-            branch = F.struct(
-                F.lit(cr.key).alias("r"),
-                disp.alias("d"),
-                cr.residue_col(parts).alias("s"),
-            )
-            chain = F.when(hit, branch) if chain is None else chain.when(hit, branch)
-        # Rust str::trim strips UNICODE White_Space (processor.rs
-        # batch_parse_package_skips_whitespace_miss pins "   \n\t";
-        # U+00A0/U+2028/U+3000-only lines are 'blank' in the reference
-        # too) — so the blank test is a Unicode-aware regex ((?U) turns
-        # on Java's UNICODE_CHARACTER_CLASS for \s), not an ASCII
-        # btrim set
-        blank = F.coalesce(value, F.lit("")).rlike(r"^(?U)\s*$")
-        tmp = df.select("*", chain.alias("__lab"))
-        return tmp.select(
-            *df.columns,
-            F.col("__lab.r").alias("_rule"),
-            F.when(blank, "blank")
-            .otherwise(F.coalesce(F.col("__lab.d"), F.lit("miss")))
-            .alias("_disposition"),
-            F.col("__lab.s").alias("_residue"),
-        )
-
-    def label(self, df: DataFrame, col: str = "value", short_circuit: bool = False) -> DataFrame:
-        if short_circuit:
-            return self._label_short_circuit(df, col)
+    def label(self, df: DataFrame, col: str = "value") -> DataFrame:
         value = F.col(col)
         # stage 1: one regex evaluation per rule per row, materialized
         # (behind the _no_pushdown barrier, like extract's __parts)
