@@ -276,7 +276,8 @@ msg = read(msg);
         pipe.write_batch(spark.createDataFrame([(v,) for v in batch], ["value"]))
     assert len(rsc.spool_files(rescue_dir, "out")) >= 3
     want = sorted(
-        r["line"] for r in rsc.read_rescued(spark, rescue_dir, "out").collect()
+        r["line"]
+        for r in rsc.decode_entries(spark.read.text(f"{rescue_dir}/out")).collect()
     )
     assert len(want) == 6
 
@@ -411,6 +412,20 @@ def test_robust_modes_on_sink_failure(spark, tmp_path):
     # debug without spool: tolerated
     assert mk("debug", False).write_batch(raw)["default"] == 0
 
+    # a kind with no writer, and a file sink with no path, fail inside the
+    # write under the same policy instead of reporting undelivered lines
+    def nowhere(robust, **spec):
+        return Pipeline(wpl=wpl, omls=[], robust=robust,
+                        sinks=[SinkSpec(name="default", format="raw", **spec)])
+
+    for robust in ("strict", "normal"):
+        with _pytest.raises(ValueError, match="'default' of kind 'nowhere'"):
+            nowhere(robust, kind="nowhere").write_batch(raw)
+        with _pytest.raises(ValueError, match="'default' of kind 'file'"):
+            nowhere(robust).write_batch(raw)
+    assert nowhere("debug", kind="nowhere").write_batch(raw)["default"] == 0
+    assert nowhere("debug").write_batch(raw)["default"] == 0
+
 
 def test_sink_tags_injection_and_forms(spark):
     """dispatcher/tests.rs test_tags_injection_into_record +
@@ -473,3 +488,45 @@ def test_sink_filter_expect_both_directions(spark):
     assert '"flag":"yes"' in res.sink_lines["on_true"].collect()[0]["line"]
     assert res.sink_lines["on_false"].count() == 1
     assert '"flag":"no"' in res.sink_lines["on_false"].collect()[0]["line"]
+
+
+def test_fanout_counts_ride_the_writes(spark, tmp_path):
+    """A 3-sink write_batch (file, blackhole, miss) runs exactly one SQL
+    execution per sink written and no bare count(1): each write counts
+    the lines it delivers. The counts equal the lines in the files."""
+    import glob
+
+    out, miss = str(tmp_path / "out"), str(tmp_path / "miss")
+    pipe = Pipeline(
+        wpl="rule r { (digit:code,chars:msg) }",
+        omls=["name : m\nrule : r\n---\ncode : digit = read(code);\nmsg = read(msg);\n"],
+        sinks=[
+            SinkSpec(name="out", path=out, format="json"),
+            SinkSpec(name="bh", kind="blackhole"),
+            SinkSpec(name="miss", path=miss, format="raw"),
+        ],
+    )
+    raw = spark.createDataFrame(
+        [("200 ok",), ("404 gone",), ("500 boom",), ("no code",)], ["value"]
+    )
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        conv = spark._jvm.scala.jdk.javaapi.CollectionConverters
+        return {e.executionId(): e for e in conv.asJava(store.executionsList())}
+
+    before = set(executions())
+    counts = pipe.write_batch(raw)
+    new = [e for i, e in sorted(executions().items()) if i not in before]
+
+    assert counts == {"out": 3, "bh": 3, "miss": 1}
+    assert len(new) == 3
+    for e in new:
+        assert not e.description().startswith("count"), e.description()
+        assert "Functions [1]: [count(1)]" not in e.physicalPlanDescription()
+
+    def file_lines(d):
+        return sum(open(p).read().count("\n") for p in glob.glob(f"{d}/part-*"))
+
+    assert file_lines(out) == counts["out"]
+    assert file_lines(miss) == counts["miss"]

@@ -153,7 +153,7 @@ def test_tcp_sink_roundtrip(spark, tmp_path):
     spool = str(tmp_path / "sink_tcp")
     c = TcpCollector("127.0.0.1", 0, spool).start()
     df = spark.createDataFrame([("alpha",), ("beta gamma",)], ["line"]).coalesce(1)
-    write_tcp(df, "127.0.0.1", c.port, framing="octet")
+    assert write_tcp(df, "127.0.0.1", c.port, framing="octet") == 2
     time.sleep(0.7)
     c.stop()
     vals = sorted(r["value"] for r in spark.read.text(spool).collect())
@@ -168,7 +168,7 @@ def test_syslog_sink_roundtrip(spark, tmp_path):
     c = UdpCollector("127.0.0.1", 0, spool).start()
     df = spark.createDataFrame([("hello world",)], ["msg"])
     lines = syslog_lines(df, F.col("msg"), pri=F.lit(34), host=F.lit("h1"), app=F.lit("a1"))
-    write_syslog(lines, "127.0.0.1", c.port, proto="udp")
+    assert write_syslog(lines, "127.0.0.1", c.port, proto="udp") == 1
     time.sleep(0.5)
     c.stop()
     back = parse_rfc3164(spark.read.text(spool)).collect()[0]
@@ -207,7 +207,7 @@ def test_victorialogs_sink_loopback(spark):
             [("hello", "2024-01-02 03:04:05"), ("world", "2024-01-02 03:04:06")],
             ["line", "evt_ts"],
         ).coalesce(1)
-        write_victorialogs(
+        sent = write_victorialogs(
             df,
             f"http://127.0.0.1:{port}",
             "/insert/jsonline",
@@ -216,6 +216,7 @@ def test_victorialogs_sink_loopback(spark):
         path, body = got[0]
         assert path == "/insert/jsonline"
         recs = [json.loads(ln) for ln in body.strip().split("\n")]
+        assert sent == sum(len(b.strip().split("\n")) for _p, b in got) == 2
         assert sorted(r["_msg"] for r in recs) == ["hello", "world"]
         # _time comes from the record's time field (2024-01-02T03:04:05 UTC)
         want_ns = 1704164645 * 10**9

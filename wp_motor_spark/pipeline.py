@@ -15,8 +15,8 @@ Infra side-channels (tests/instance/topology/sinks/infra.d/): miss
 default (no OML model matched). Everything is map-only + broadcast joins:
 at 100TB each branch is an independent column-pruned scan of the same
 source. Multi-sink fanout shares one logical plan but nothing is
-materialized at the fork: every sink write (and its line count) re-runs the
-parse over the source.
+materialized at the fork: every sink write re-runs the parse over the
+source. Each write counts the lines it delivers as it runs (no re-scan).
 
 Batch and streaming share the plan: `run_stream` wraps the same batch
 assembly in foreachBatch (the reference's daemon mode).
@@ -30,8 +30,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from wp_motor_spark.conditions import compile_condition
 from wp_motor_spark.oml.compiler import OmlTransform, compile_oml
-from wp_motor_spark.sinks.formats import format_lines
-from wp_motor_spark.sinks.spec import SinkSpec
+from wp_motor_spark.sinks import SinkSpec, format_lines, write_counted
 from wp_motor_spark.wpl.compiler import MultiParser
 
 
@@ -257,57 +256,59 @@ class Pipeline:
                 result.sink_lines[spec.name] = lines
         return result
 
-    def _write_sink(self, spec: SinkSpec, lines: DataFrame) -> None:
-        """One sink write (no rescue handling — the caller wraps)."""
+    def _write_sink(self, spec: SinkSpec, lines: DataFrame) -> int:
+        """One sink write (no rescue handling — the caller wraps); returns
+        the lines it delivered, counted by the write itself."""
         if spec.kind == "file" and spec.path:
-            lines.write.mode("append").text(spec.path)
-        elif spec.kind == "test_rescue":
+            return write_counted(lines, lambda w: w.mode("append").text(spec.path))
+        if spec.kind == "test_rescue":
             # failure-injection file sink (backends/test_rescue.rs): fails
             # while its health marker is down
             from wp_motor_spark.sinks import rescue as rsc
 
-            rsc.write_or_raise(lines, spec.path)
-        elif spec.kind == "kafka":
+            return rsc.write_or_raise(lines, spec.path)
+        if spec.kind == "kafka":
             from wp_motor_spark.sources.kafka import sink_options
 
-            (
-                lines.selectExpr("CAST(line AS STRING) AS value")
-                .write.format("kafka")
-                .options(**sink_options(spec.options))
-                .save()
+            return write_counted(
+                lines.selectExpr("CAST(line AS STRING) AS value"),
+                lambda w: w.format("kafka").options(**sink_options(spec.options)).save(),
             )
-        elif spec.kind == "tcp":
+        if spec.kind == "tcp":
             from wp_motor_spark.sinks.net import write_tcp
 
-            write_tcp(
+            return write_tcp(
                 lines,
                 spec.options.get("host", "127.0.0.1"),
                 int(spec.options["port"]),
                 framing=spec.options.get("framing", "newline"),
             )
-        elif spec.kind == "syslog":
+        if spec.kind == "syslog":
             from wp_motor_spark.sinks.net import write_syslog
 
-            write_syslog(
+            return write_syslog(
                 lines,
                 spec.options.get("host", "127.0.0.1"),
                 int(spec.options["port"]),
                 proto=spec.options.get("proto", "udp"),
             )
-        elif spec.kind == "victorialogs":
+        if spec.kind == "victorialogs":
             from wp_motor_spark.sinks.victorialogs import write_victorialogs
 
-            write_victorialogs(
+            return write_victorialogs(
                 lines,
                 endpoint=spec.options.get("endpoint", ""),
                 insert_path=spec.options.get("insert_path", "/insert/json"),
                 create_time_col=spec.options.get("create_time_field"),
             )
-        elif spec.kind == "blackhole":
-            lines.write.format("noop").mode("append").save()
+        if spec.kind in ("blackhole", "memory"):
+            return write_counted(lines, lambda w: w.format("noop").mode("append").save())
+        # unknown kind or pathless file sink: never report these lines delivered
+        raise ValueError(f"sink {spec.name!r} of kind {spec.kind!r} has nowhere to write")
 
     def write_batch(self, raw: DataFrame, col: str = "value") -> dict[str, int]:
-        """Run and append to each sink's destination; returns line counts.
+        """Run and append to each sink's destination; returns the lines
+        each sink write delivered.
 
         With ``rescue_dir`` set, a failing sink write spools its formatted
         lines as RescueEntry JSONL instead of failing the batch
@@ -319,7 +320,7 @@ class Pipeline:
             if lines is None:
                 continue
             try:
-                self._write_sink(spec, lines)
+                counts[spec.name] = self._write_sink(spec, lines)
             except Exception as exc:
                 if self.robust == "strict":
                     raise  # Terminate: no rescue masks a failing sink
@@ -339,8 +340,6 @@ class Pipeline:
                         "spool — lines dropped): %s", spec.name, exc
                     )
                 counts[spec.name] = 0
-                continue
-            counts[spec.name] = lines.count()
         return counts
 
     def replay_rescue(
@@ -356,12 +355,12 @@ class Pipeline:
         is re-delivered file-by-file (each failed batch wrote its own part
         files), sleeping between files so the average rate stays at or
         under the limit — a recovering downstream must not be re-flooded
-        by the backlog. Partial-failure semantics are unchanged: a failing
-        file leaves the WHOLE spool for the next run (at-least-once, same
-        flush-interval window as the reference)."""
+        by the backlog. Unlimited replay delivers the whole spool in one
+        write. Partial-failure semantics are the same either way: a
+        failing chunk leaves the WHOLE spool for the next run
+        (at-least-once, same flush-interval window as the reference)."""
+        import os
         import time as _time
-
-        from pyspark.sql import Observation
 
         from wp_motor_spark.sinks import rescue as rsc
 
@@ -373,35 +372,23 @@ class Pipeline:
             spec = by_name.get(name)
             if spec is None:
                 continue  # no routing for this spool; leave it in place
-            if not speed_limit:
-                lines = rsc.read_rescued(spark, self.rescue_dir, name)
-                try:
-                    self._write_sink(spec, lines)
-                except Exception:
-                    continue  # still unhealthy; retry on the next wprescue
-                counts[name] = lines.count()
-                rsc.drain(self.rescue_dir, name)
-                continue
+            whole = [os.path.join(self.rescue_dir, name)]
+            chunks = rsc.spool_files(self.rescue_dir, name) if speed_limit else whole
             delivered = 0
             t0 = _time.monotonic()
-            failed = False
-            for path in rsc.spool_files(self.rescue_dir, name):
-                obs = Observation()
-                lines = rsc.decode_entries(spark.read.text(path)).observe(
-                    obs, F.count(F.lit(1)).alias("n")
-                )
+            for path in chunks:
+                lines = rsc.decode_entries(spark.read.text(path))
                 try:
-                    self._write_sink(spec, lines)
+                    delivered += self._write_sink(spec, lines)
                 except Exception:
-                    failed = True
-                    break  # keep the spool; next run re-delivers it all
-                delivered += int(obs.get["n"])
-                # token-bucket pacing at file granularity: sleep until
-                # delivered/limit seconds have elapsed overall
-                wait = delivered / speed_limit - (_time.monotonic() - t0)
-                if wait > 0:
-                    _time.sleep(wait)
-            if not failed:
+                    break  # still unhealthy; next run re-delivers the whole spool
+                if speed_limit:
+                    # token-bucket pacing at file granularity: sleep until
+                    # delivered/limit seconds have elapsed overall
+                    wait = delivered / speed_limit - (_time.monotonic() - t0)
+                    if wait > 0:
+                        _time.sleep(wait)
+            else:
                 counts[name] = delivered
                 rsc.drain(self.rescue_dir, name)
         return counts

@@ -3,8 +3,9 @@
 Reference: src/sinks/backends/{tcp.rs,syslog.rs} + the RFC3164 encoder
 (src/protocol/syslog/encoder.rs:36-48).
 
-Shape: `df.foreachPartition` — each executor task opens one connection and
-streams its partition (the Spark analog of the reference's per-sink
+Shape: one `mapPartitions` job — each executor task opens one connection,
+streams its partition and yields the rows it sent; their sum is the
+delivered count (the Spark analog of the reference's per-sink
 connection pool; N partitions = N concurrent connections). Used directly
 for batch, and from foreachBatch for streaming.
 """
@@ -22,15 +23,16 @@ def write_tcp(
     port: int,
     framing: str = "newline",  # newline | octet (RFC6587 octet counting)
     col: str = "line",
-) -> None:
-    """Send one frame per row over TCP; one connection per partition."""
+) -> int:
+    """Send one frame per row over TCP, one connection per partition;
+    returns the rows sent."""
 
-    def send(rows) -> None:
+    def send(rows) -> list[int]:
         import socket
 
-        sock = None
+        sock, n = None, 0
         try:
-            for r in rows:
+            for n, r in enumerate(rows, 1):
                 if sock is None:  # connect lazily: skip empty partitions
                     sock = socket.create_connection((host, port), timeout=10)
                 msg = (r[col] or "").encode("utf-8")
@@ -41,8 +43,9 @@ def write_tcp(
         finally:
             if sock is not None:
                 sock.close()
+        return [n]
 
-    lines.foreachPartition(send)
+    return lines.rdd.mapPartitions(send).sum()
 
 
 def write_syslog(
@@ -51,24 +54,26 @@ def write_syslog(
     port: int,
     proto: str = "udp",
     col: str = "line",
-) -> None:
+) -> int:
     """Send rows as syslog datagrams/frames. Rows should already be
-    RFC3164-encoded (see `syslog_lines`); raw lines pass through as-is."""
+    RFC3164-encoded (see `syslog_lines`); raw lines pass through as-is.
+    Returns the rows sent."""
     if proto == "tcp":
-        write_tcp(lines, host, port, framing="newline", col=col)
-        return
+        return write_tcp(lines, host, port, framing="newline", col=col)
 
-    def send(rows) -> None:
+    def send(rows) -> list[int]:
         import socket
 
         sock = socket.socket(socket.AF_INET, socket.SOCK_DGRAM)
+        n = 0
         try:
-            for r in rows:
+            for n, r in enumerate(rows, 1):
                 sock.sendto((r[col] or "").encode("utf-8"), (host, port))
         finally:
             sock.close()
+        return [n]
 
-    lines.foreachPartition(send)
+    return lines.rdd.mapPartitions(send).sum()
 
 
 def syslog_lines(

@@ -22,7 +22,9 @@ import json
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
+
+from wp_motor_spark.sinks import write_counted
 
 RESCUE_VERSION = 1
 
@@ -46,12 +48,13 @@ def set_healthy(path: str, healthy: bool) -> None:
         open(marker, "w").close()
 
 
-def write_or_raise(lines: DataFrame, path: str) -> None:
+def write_or_raise(lines: DataFrame, path: str) -> int:
     """test_rescue sink write: a plain append-text file sink that fails
-    while the health marker is down (ASinkTestProxy.send -> Err)."""
+    while the health marker is down (ASinkTestProxy.send -> Err); returns
+    the lines written."""
     if os.path.exists(health_marker(path)):
         raise SinkUnhealthyError(path)
-    lines.write.mode("append").text(path)
+    return write_counted(lines, lambda w: w.mode("append").text(path))
 
 
 def rescue_lines(lines: DataFrame, rescue_dir: str, sink_name: str) -> int:
@@ -59,14 +62,11 @@ def rescue_lines(lines: DataFrame, rescue_dir: str, sink_name: str) -> int:
 
     Returns the number of lines rescued by THIS call (not the cumulative
     spool size — two consecutive failures report their own batch counts).
-    The count rides the write job via observe(): no second scan of the
+    The count rides the write job (`write_counted`): no second scan of the
     spool, and no recompute of `lines` (whose lineage was the failed
     action and may be expensive)."""
-    from pyspark.sql import Observation
-
     dest = os.path.join(rescue_dir, sink_name)
-    obs = Observation()
-    entries = lines.observe(obs, F.count(F.lit(1)).alias("n")).select(
+    entries = lines.select(
         F.to_json(
             F.struct(
                 F.lit(RESCUE_VERSION).alias("version"),
@@ -75,20 +75,13 @@ def rescue_lines(lines: DataFrame, rescue_dir: str, sink_name: str) -> int:
             )
         ).alias("value")
     )
-    entries.write.mode("append").text(dest)
-    return int(obs.get["n"])
-
-
-def read_rescued(spark: SparkSession, rescue_dir: str, sink_name: str) -> DataFrame:
-    """Decode one sink's spool back to a `line` DataFrame. Unknown kinds
-    or versions are passed through untouched as raw text (forward
-    compatibility, rescue.rs RescueEntry::parse fallback)."""
-    return decode_entries(spark.read.text(os.path.join(rescue_dir, sink_name)))
+    return write_counted(entries, lambda w: w.mode("append").text(dest))
 
 
 def decode_entries(raw: DataFrame) -> DataFrame:
-    """RescueEntry JSONL -> `line` rows (shared by whole-spool and
-    per-file reads)."""
+    """RescueEntry JSONL (a whole spool or one part file) -> `line` rows.
+    Unknown kinds or versions are passed through untouched as raw text
+    (forward compatibility, rescue.rs RescueEntry::parse fallback)."""
     parsed = F.from_json(
         F.col("value"), "version INT, kind STRING, raw STRING"
     )

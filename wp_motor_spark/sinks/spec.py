@@ -14,7 +14,9 @@ from dataclasses import dataclass, field
 @dataclass
 class SinkSpec:
     name: str
-    kind: str = "file"  # file | blackhole | kafka | memory
+    # file | test_rescue | kafka | tcp | syslog | victorialogs | blackhole |
+    # memory (a noop write, the default sink); other kinds fail their write
+    kind: str = "file"
     path: str | None = None  # file: output dir
     format: str = "json"  # json | csv | kv | raw | show | proto-text
     condition: str | None = None  # routing condition expression (§2.6)

@@ -311,13 +311,7 @@ def cmd_data_stat(root: str) -> int:
         print(f"source {s.key}: {lines} lines ({p})")
     for sk in ws.sinks:
         if sk.kind == "file" and sk.path and os.path.isdir(sk.path):
-            n = sum(
-                open(os.path.join(r, f), "rb").read().count(b"\n")
-                for r, _d, fs in os.walk(sk.path)
-                for f in fs
-                if not f.startswith((".", "_"))
-            )
-            print(f"sink {sk.name}: {n} lines ({sk.path})")
+            print(f"sink {sk.name}: {_path_line_count(sk.path)} lines ({sk.path})")
     print(f"wproj data stat: {total} total source lines")
     return 0
 
@@ -347,22 +341,20 @@ def cmd_data_clean(root: str) -> int:
 
 
 def _path_line_count(path: str) -> int:
-    """Lines in a plain file OR a Spark text-output directory."""
-    if os.path.isfile(path):
-        with open(path, "rb") as fh:
-            return sum(
-                chunk.count(b"\n") for chunk in iter(lambda: fh.read(1 << 20), b"")
-            )
-    return _sink_line_count(path)
-
-
-def _sink_line_count(path: str) -> int:
-    return sum(
-        open(os.path.join(r, f), "rb").read().count(b"\n")
+    """Lines in a plain file OR a Spark text-output directory (hidden and
+    `_`-prefixed marker files skipped), read in 1 MiB chunks."""
+    files = [path] if os.path.isfile(path) else [
+        os.path.join(r, f)
         for r, _d, fs in os.walk(path)
         for f in fs
         if not f.startswith((".", "_"))
-    )
+    ]
+    n = 0
+    for p in files:
+        with open(p, "rb") as fh:
+            while chunk := fh.read(1 << 20):
+                n += chunk.count(b"\n")
+    return n
 
 
 def cmd_data_validate(root: str, input_cnt: int | None) -> int:
@@ -387,7 +379,7 @@ def cmd_data_validate(root: str, input_cnt: int | None) -> int:
                 input_cnt += _path_line_count(s.path)
     file_sinks = [sk for sk in ws.sinks if sk.kind == "file" and sk.path]
     lines = {
-        sk.name: (_sink_line_count(sk.path) if os.path.isdir(sk.path) else 0)
+        sk.name: (_path_line_count(sk.path) if os.path.isdir(sk.path) else 0)
         for sk in file_sinks
     }
     total_input = input_cnt or sum(lines.values())
